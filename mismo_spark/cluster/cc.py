@@ -20,10 +20,17 @@ cutting lineage exactly like mismo's per-round ``.cache()``
 detected with one cheap pass per round (count + order-independent
 xxhash64 sum of the edge set / label set).
 
-Ids of any orderable type are supported by factorizing to int64 first
-(mismo/_factorizer.py:12-152) — but *without* the reference's global
-``dense_rank`` (a single-partition sort at scale): distinct ids get
-``monotonically_increasing_id`` codes and are hash-joined back.
+Ids of any orderable type are clustered as they come — no factorize
+to int64 codes first.  Both algorithms touch ids only through
+``min``, ``least``, ``greatest``, ``<`` and ``!=``, which Spark defines
+for every orderable type, and both converge with every node labelled
+by the minimum id of its component — already mismo's canonical
+representative, so there is nothing to decode or relabel.  The
+reference factorizes ids to int64 first (mismo/_factorizer.py:12-152);
+here that cost a mapping table, two encode joins, a decode join and a
+relabel join per call on the pipeline's hot path (its record_id is the
+page url), and ran slower end to end than clustering the url strings
+directly.
 """
 
 from __future__ import annotations
@@ -66,97 +73,48 @@ def connected_components(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """→ DataFrame(record_id, component) — component is the minimum
-    record_id of the component (same type as record_id).
+    record_id of the component, of record_id's own type.  Ids may be of
+    any orderable type (long, string, ...) and are clustered as they
+    come: both algorithms only compare ids, and their fixed point
+    already labels each component with its minimum id.
 
     ``records`` (optional, column ``record_id``) adds singleton
     components for unlinked records
-    (mismo/cluster/_connected_components.py:305-314).
+    (mismo/cluster/_connected_components.py:305-314).  Without it every
+    edge endpoint is emitted, a self-loop's endpoint included.
+
+    Duplicate and self-loop edges are accepted and never change the
+    labels (every aggregation is a min).  Self-loops are dropped up
+    front; duplicates are not, since typical link tables are already
+    unique and a dedup exchange over the whole edge relation would tax
+    every caller.  What duplicates cost: under ``"star"`` they survive
+    the first large-star pass and are gone after the first small-star
+    ``distinct``; under ``"naive"`` the edge relation is checkpointed
+    as given and re-joined every round, so they persist to the end.
     """
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
     edges = links.select(F.col(ID_L).alias(_U), F.col(ID_R).alias(_V))
-
-    def _run(int_edges: DataFrame) -> DataFrame:
-        if algorithm == "star":
-            return _cc_star(int_edges, max_iter, checkpoint_dir)
-        if algorithm == "naive":
-            return _cc_naive(int_edges, max_iter, checkpoint_dir)
+    proper = edges.filter(F.col(_U) != F.col(_V))
+    if algorithm == "star":
+        labels = _cc_star(proper, max_iter, checkpoint_dir)
+    elif algorithm == "naive":
+        labels = _cc_naive(proper, max_iter, checkpoint_dir)
+    else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
-
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    id_types = [links.schema[ID_L].dataType, links.schema[ID_R].dataType]
-    if records is not None:
-        id_types.append(records.schema["record_id"].dataType)
-    if all(isinstance(t, integral) for t in id_types):
-        # -- fast path: ids are already integral ------------------------
-        # Both algorithms converge with every node labelled by the
-        # MINIMUM id of its component, which for integral ids is exactly
-        # mismo's canonical representative — so the factorize/decode/
-        # relabel machinery below (~6 extra shuffles, two of them O(V)
-        # joins) is pure overhead and skipped.  This is the hot path:
-        # the pipeline's record_id is int64.
-        # No up-front .distinct(): both algorithms are duplicate-
-        # insensitive (min-label and groupBy-min aggregation; the first
-        # small-star round's closing distinct canonicalizes the edge
-        # set anyway), and typical callers feed already-unique link
-        # tables — the dedup exchange over the full edge relation was
-        # pure overhead on the hot path.
-        labels = _run(edges.filter(F.col(_U) != F.col(_V)))
-        out = labels.withColumnRenamed("id", "record_id")
-        base = (
-            records.select("record_id")
-            if records is not None
-            # no records table: emit every edge endpoint (star labels
-            # omit roots — see _cc_star — so completion is still needed)
-            else edges.select(F.col(_U).alias("record_id"))
-            .unionByName(edges.select(F.col(_V).alias("record_id")))
-            .distinct()
-        )
-        return base.join(out, "record_id", "left").select(
-            "record_id",
-            F.coalesce(F.col("component"), F.col("record_id")).alias("component"),
-        )
-
-    # -- factorize arbitrary ids → int64 (no global sort) ----------------
-    ids = edges.select(F.col(_U).alias("record_id")).unionByName(
-        edges.select(F.col(_V).alias("record_id"))
-    )
-    if records is not None:
-        ids = ids.unionByName(records.select("record_id"))
-    mapping = (
-        ids.distinct()
-        .withColumn("__code", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    int_edges = (
-        edges.join(mapping.withColumnRenamed("record_id", _U), _U)
-        .select(F.col("__code").alias(_U), F.col(_V))
-        .join(mapping.withColumnRenamed("record_id", _V), _V)
-        .select(_U, F.col("__code").alias(_V))
-        .filter(F.col(_U) != F.col(_V))
+    base = (
+        records.select("record_id")
+        if records is not None
+        # no records table: emit every edge endpoint, self-loops'
+        # included (star labels omit roots — see _cc_star — so
+        # completion is still needed)
+        else edges.select(F.col(_U).alias("record_id"))
+        .unionByName(edges.select(F.col(_V).alias("record_id")))
         .distinct()
     )
-
-    labels = _run(int_edges)
-
-    # -- decode + canonical relabel + singletons --------------------------
-    out = mapping.join(labels, mapping["__code"] == labels["id"], "left").select(
+    out = labels.withColumnRenamed("id", "record_id")
+    return base.join(out, "record_id", "left").select(
         "record_id",
-        F.coalesce(F.col("component"), F.col("__code")).alias("__comp_code"),
+        F.coalesce(F.col("component"), F.col("record_id")).alias("component"),
     )
-    # canonical label = min ORIGINAL record id per component (mismo's
-    # representative choice, mismo/cluster/_connected_components.py:253-263)
-    # — engine-independent, so results compare across systems.  The
-    # relabel is one groupBy-min (small: one row per component) + join.
-    # (Unnecessary when ids are integral — see the fast path above —
-    # because codes from monotonically_increasing_id don't preserve
-    # record-id order.)
-    canon = out.groupBy("__comp_code").agg(F.min("record_id").alias("component"))
-    out = out.join(canon, "__comp_code").select("record_id", "component")
-    if records is None:
-        # only ids that appear in edges
-        return out
-    return records.select("record_id").join(out, "record_id", "left")
 
 
 def _cc_naive(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> DataFrame:
@@ -247,8 +205,8 @@ def _cc_star(edges: DataFrame, max_iter: int, checkpoint_dir: str | None) -> Dat
 
     Returns PARENT labels only — (id, component) for every non-root
     node; roots (= component minima) are absent and must be
-    self-labelled by the caller's coalesce.  Callers always finish
-    with a left-join + coalesce against records/mapping/nodes anyway,
+    self-labelled by the caller's coalesce.  The caller always finishes
+    with a left-join + coalesce against records/edge endpoints anyway,
     so emitting root rows here would cost an extra O(V) distinct +
     join for nothing."""
     from mismo_spark._util import RoundPartitions

@@ -104,28 +104,33 @@ def choose_q(strings: DataFrame, *, max_distance: int, pad_char: str = PAD_CHAR)
     d = int(max_distance)
     col = strings[strings.columns[0]]
     # ONE full pass for all three data statistics (row count, average
-    # length, 2-gram type count): the padded 2-gram relation has
-    # exactly len+1 rows per non-null string, so posexplode recovers
-    # the record count (pos == 0 rows) and Σlen (total − n) alongside
-    # the HLL — the separate count/avg scan was a second full read of
-    # the corpus for numbers this relation already carries.
+    # length, 2-gram type count): posexplode over the padded 2-grams
+    # yields exactly one pos == 0 row per non-null string (every such
+    # string has at least one gram), so the record count and Σlen are
+    # summed over those rows alongside the HLL over every row — a
+    # separate count/avg scan would be a second full read of the corpus.
+    # The gram arrays are DISTINCT grams (_padded_grams), so the row
+    # total is NOT len+1 per string and must not stand in for length:
+    # a repetitive field would read as very short and cap q at 2.
     # rsd=0.01 on the HLL: the default 5% error is the same order as
     # the decision margin; an overestimate would keep the quadratic
     # small-q plan this heuristic exists to prevent
     g2 = strings.where(col.isNotNull()).select(
+        F.length(col).alias("__len"),
         F.posexplode_outer(_padded_grams(col, q=2, pad_char=pad_char)).alias(
             "__pos", "g"
-        )
+        ),
     ).where(F.col("g").isNotNull())
+    first = F.col("__pos") == 0
     stats = g2.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((F.col("__pos") == 0).cast("long")).alias("n"),
+        F.sum(first.cast("long")).alias("n"),
+        F.sum(F.when(first, F.col("__len"))).alias("len_sum"),
         F.approx_count_distinct("g", 0.01).alias("t"),
     ).first()
     n, types2 = stats["n"] or 0, stats["t"]
     if n == 0:
         return 2
-    avg_len = (stats["total"] - n) / n
+    avg_len = stats["len_sum"] / n
     alphabet = max(2.0, float(types2) ** 0.5)
     q_cap = max(2, min(_AUTO_Q_MAX, int(-(-avg_len // 2))))
     budget = n * (1 + d) * _AUTO_Q_PAIR_BUDGET_PER_ROW

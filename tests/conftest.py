@@ -9,6 +9,7 @@ cluster-set oracle.
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import DataFrame
@@ -22,7 +23,13 @@ def spark():
         "mismo_spark_tests",
         master="local[4]",
         shuffle_partitions=2,
-        extra_conf={"spark.default.parallelism": "4"},
+        extra_conf={
+            "spark.default.parallelism": "4",
+            # bounded test heap: get_spark's production default (48g)
+            # lets the test JVM outgrow a 16 GB host and be OOM-killed
+            # part-way through the suite
+            "spark.driver.memory": os.environ.get("MISMO_SPARK_DRIVER_MEM", "3g"),
+        },
     )
     yield s
     s.stop()

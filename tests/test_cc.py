@@ -64,12 +64,32 @@ def test_singleton_labeling(spark, algo):
 
 @pytest.mark.parametrize("algo", ALGOS)
 def test_string_ids(spark, algo):
+    # ids are clustered as strings: each component is the smallest
+    # STRING id of its cluster ("10" < "9" < "x"), not a numeric order
     links = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("x", "y")],
+        [("c", "b"), ("b", "a"), ("y", "x"), ("9", "10"), ("q", "q")],
         "record_id_l string, record_id_r string",
     )
-    got = get_clusters(connected_components(links, algorithm=algo))
-    assert got == {frozenset({"a", "b", "c"}), frozenset({"x", "y"})}
+    out = connected_components(links, algorithm=algo)
+    assert out.schema["record_id"].dataType.simpleString() == "string"
+    assert out.schema["component"].dataType.simpleString() == "string"
+    want = {
+        ("a", "a"), ("b", "a"), ("c", "a"),
+        ("x", "x"), ("y", "x"),
+        ("10", "10"), ("9", "10"),
+        ("q", "q"),  # a self-loop's endpoint is still emitted
+    }
+    assert sorted(tuple(r) for r in out.collect()) == sorted(want)
+
+    records = spark.createDataFrame(
+        [(i,) for i in ["a", "b", "c", "x", "y", "9", "10", "q", "lone"]],
+        "record_id string",
+    )
+    out = connected_components(links, records, algorithm=algo)
+    assert out.schema["component"].dataType.simpleString() == "string"
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        want | {("lone", "lone")}
+    )
 
 
 def test_max_iter_1_does_not_converge_naive(spark):

@@ -252,6 +252,25 @@ def test_auto_q(spark):
         edit_distance_pairs(pdf, "name", max_distance=1, q="bogus")
 
 
+def test_choose_q_repetitive_field_uses_string_length(spark):
+    # each value is a 3-letter unit repeated 8 times: 24 chars but at
+    # most 5 DISTINCT padded 2-grams, so a length read off the
+    # distinct-gram count would cap q at 2 and warn; the real length
+    # lets q=3 through
+    import random
+    import warnings
+
+    from mismo_spark.text.edjoin import choose_q
+
+    rng = random.Random(11)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    rows = [("".join(rng.choice(letters) for _ in range(3)) * 8,) for _ in range(3000)]
+    df = spark.createDataFrame(rows, "name string")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert choose_q(df, max_distance=1) == 3
+
+
 def test_choose_q_empty_and_null(spark):
     from mismo_spark.text.edjoin import choose_q
 

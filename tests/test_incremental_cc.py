@@ -68,3 +68,33 @@ def test_incremental_pure_new_batch(spark):
         old, _edges(spark, [(10, 11)]), _ids(spark, [10, 11, 12])
     )
     assert _assign(inc) == {0: 0, 1: 0, 10: 10, 11: 10, 12: 12}
+
+
+def test_incremental_string_ids_equal_full_recompute(spark):
+    def edges(pairs):
+        return spark.createDataFrame(pairs, "record_id_l string, record_id_r string")
+
+    def ids(xs):
+        return spark.createDataFrame([(i,) for i in xs], "record_id string")
+
+    old_ids = ["u/a", "u/b", "u/c", "u/d", "u/e", "u/f"]
+    old_edges = [("u/b", "u/a"), ("u/d", "u/c"), ("u/f", "u/e")]
+    new_ids = ["n/1", "n/2", "z/3"]
+    # merges {a,b} with {c,d}; n/2 joins {e,f}; z/3 stays alone
+    new_edges = [("u/c", "u/b"), ("n/1", "u/d"), ("u/f", "n/2")]
+
+    old = connected_components(edges(old_edges), ids(old_ids))
+    inc = incremental_components(old, edges(new_edges), ids(new_ids))
+    full = connected_components(edges(old_edges + new_edges), ids(old_ids + new_ids))
+    # row for row, selected by name: incremental_components emits its
+    # columns in a different order
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("record_id", "component").collect())
+
+    assert rows(inc) == rows(full)
+    assert inc.schema["component"].dataType.simpleString() == "string"
+    assert _assign(inc) == {
+        "u/a": "n/1", "u/b": "n/1", "u/c": "n/1", "u/d": "n/1", "n/1": "n/1",
+        "u/e": "n/2", "u/f": "n/2", "n/2": "n/2",
+        "z/3": "z/3",
+    }
